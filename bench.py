@@ -611,8 +611,15 @@ def main() -> int:
             # NOT in the printed driver line (tail-capture length);
             # cpu is the host-load-immune column — compare IT first
             # when a wall number moves round-over-round
+            # local_n: the local[N] this ran at — executor CPU is
+            # only comparable between runs at equal N
             json.dump(
-                {**payload, "reps": reps, "cpu": cpu_times},
+                {
+                    **payload,
+                    "reps": reps,
+                    "cpu": cpu_times,
+                    "local_n": spark.sparkContext.defaultParallelism,
+                },
                 fh, indent=1, sort_keys=True,
             )
         print(f"# full timings -> {local}", file=sys.stderr)

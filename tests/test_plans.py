@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import contextlib
 import io
-
+import json
 import os
 
 import pytest
@@ -934,7 +934,7 @@ def test_rotation_invariant_fires():
     reject (a) a window that skips a staler query, (b) an out-of-
     window query past the staleness cap when its class would fit,
     and accept (c) the overflow relief when one staleness class is
-    bigger than the window, plus (d) the live registry order."""
+    bigger than the window, plus (d) the computed registry order."""
     import pytest
 
     from datasplash_spark import queries as Q
@@ -967,41 +967,62 @@ def test_rotation_invariant_fires():
         ["n1", "n2", "mid"], max_round=5, latest=latest, window=2, cap=4
     )
 
-    # (d) the live registry order passes against the real artifacts
-    # (the effective state — the self-gated newest round excluded)
-    check(Q._ORDER, Q._eff_round, Q._eff_rows)
-
-    # (e) self-gating detection: when the newest artifact round
-    # covers the window head, the effective state drops that round
-    # (re-derived from the remaining real artifacts) and flags it
-    fake = dict(Q._latest_rows)
-    for q in Q._ORDER[:50]:
-        fake[q] = 99
-    er, rows, gated = Q._effective_artifact_state(Q._ORDER, 99, fake)
-    assert gated and er < 99
-    check(Q._ORDER, er, rows)  # order still judged valid vs history
-    # and a NON-covering newest round passes through untouched
-    er2, rows2, gated2 = Q._effective_artifact_state(
-        Q._ORDER, Q._max_round, Q._latest_rows
-    )
-    assert not gated2 and er2 == Q._max_round and rows2 == Q._latest_rows
+    # (d) the computed registry order passes against the raw artifacts
+    check(Q._ORDER, Q._max_round, Q._latest_rows)
 
 
-def test_rotation_is_current():
-    """The loud-but-non-bricking forcing function: once the driver
-    has gated the current window (the newest CORRECTNESS artifact
-    covers it), the NEXT session must rotate the registry — this
-    test fails with instructions while import/bench/entry keep
-    working (the import-time invariant judges the order against the
-    pre-gating artifact state instead of bricking mid-round)."""
-    from datasplash_spark import queries as Q
+def test_gate_order_rotates_with_new_artifact(tmp_path):
+    """The gate order is computed from the CORRECTNESS artifacts: a
+    new round that marks the current window green rotates the next
+    window onto the stalest remaining queries, with no source edit.
+    Malformed artifacts are skipped; a ``no_oracle`` row counts as
+    green only when the Spark run produced rows."""
 
-    assert not Q._WINDOW_ALREADY_GATED, (
-        f"CORRECTNESS_r{Q._max_round:02d}.json has gated the current "
-        "driver window: rotate the registry (stalest block first, "
-        "see the greedy-fill comment above _NEW_R13) and update "
-        "_NEW_R{next} before adding gated queries"
-    )
+    def green():
+        return {"rows_match": True, "schema_match": True,
+                "hash_match": True, "spark_rows": 3, "err": None}
+
+    def write(rnd, rows):
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(
+            json.dumps(rows)
+        )
+
+    # listed against name order, so ties must follow ``names``
+    names = [f"q{i}" for i in range(9, -1, -1)]
+    write(1, {q: green() for q in ("q0", "q1", "q2", "q3")})
+    write(2, {
+        **{q: green() for q in ("q4", "q5", "q6", "q7")},
+        "q8": {"err": "no_oracle", "spark_rows": 5},
+        "q9": {**green(), "hash_match": False},
+    })
+    write(3, {
+        "queries": {
+            "q0": green(),
+            "q1": green(),
+            "q2": {"err": "no_oracle", "spark_rows": None},
+        }
+    })
+    (tmp_path / "CORRECTNESS_r09.json").write_text('{"q3": {"rows_m')
+
+    state = Q._latest_driver_rows(root=str(tmp_path))
+    assert state == (3, {"q0": 3, "q1": 3, "q2": 1, "q3": 1, "q4": 2,
+                         "q5": 2, "q6": 2, "q7": 2, "q8": 2})
+    order = Q._gate_order(names, *state)
+    # never gated first, then stalest; ties keep ``names`` order
+    assert order == ["q9", "q3", "q2", "q8", "q7", "q6", "q5", "q4",
+                     "q1", "q0"]
+    Q._check_rotation_invariants(order, *state, window=4)
+
+    # the driver gates that window green in a new round
+    write(4, {q: green() for q in order[:4]})
+    state = Q._latest_driver_rows(root=str(tmp_path))
+    assert state[0] == 4
+    with pytest.raises(RuntimeError, match="staler than"):
+        Q._check_rotation_invariants(order, *state, window=4)
+    nxt = Q._gate_order(names, *state)
+    assert nxt[:4] == ["q7", "q6", "q5", "q4"]
+    assert not set(nxt[:4]) & set(order[:4])
+    Q._check_rotation_invariants(nxt, *state, window=4)
 
 
 def test_registry_headroom():
@@ -1026,8 +1047,8 @@ def test_registry_headroom():
     cap = Q._DRIVER_WINDOW * (Q._MAX_STALENESS - 1) + 6
     assert len(Q._ORDER) <= cap, (
         f"gated registry has {len(Q._ORDER)} queries > cap {cap}: "
-        "retire or merge a gated row before promoting (see the "
-        "round-10 headroom policy in the gate-order comment)"
+        "retire or merge a gated row before promoting (see "
+        "_MAX_STALENESS in queries.py)"
     )
 
 
