@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Benchmark harness: run the headline query corpus at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and print ONE JSON line:
+``local[$SPARK_GRAFT_CPUS]`` and print a compact totals line
+``{"value", "n", "failed"}`` followed, LAST, by the full payload:
 
     {"metric": "corpus_wall", "value": N, "unit": "sec",
      "queries": {"pricing_summary": sec, ...}, "sf": ...}
@@ -107,6 +108,23 @@ def _hygiene(spark) -> None:
         spark.sparkContext._jvm.System.gc()
     except Exception as e:
         print(f"# cleanup warning: {e}", file=sys.stderr)
+
+
+def _emit(payload: dict) -> None:
+    """Print a compact totals line, then the full payload LAST: a
+    parser that takes the last JSON line of stdout gets the per-query
+    table. The totals line has no "metric" key, so a parser scanning
+    for the corpus_wall line never picks it up."""
+    print(
+        json.dumps(
+            {
+                "value": payload["value"],
+                "n": len(payload["queries"]),
+                "failed": payload["failed"],
+            }
+        )
+    )
+    print(json.dumps(payload))
 
 
 def main() -> int:
@@ -625,24 +643,7 @@ def main() -> int:
         print(f"# full timings -> {local}", file=sys.stderr)
     except Exception as e:  # the artifact must never fail the bench
         print(f"# local artifact warning: {e}", file=sys.stderr)
-    print(json.dumps(payload))
-    # Truncation-proof totals (VERDICT r13 item 2): the full one-line
-    # payload above is ~6 KB at 177 entries and the driver's stdout
-    # tail capture front-truncated it in r12 (PERF_r13 lost the whole
-    # round-over-round comparison). A second, ~60-byte compact line —
-    # printed LAST, so a bounded tail always holds it intact — carries
-    # the headline totals. It deliberately has no "metric" key, so a
-    # parser scanning for the corpus_wall line can never pick it up by
-    # mistake; the full line stays the driver contract.
-    print(
-        json.dumps(
-            {
-                "value": payload["value"],
-                "n": len(timings),
-                "failed": failed,
-            }
-        )
-    )
+    _emit(payload)
     spark.stop()
     return 0
 

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.elementwise import ColumnLike, _col
+from ..pipeline import _read_relation
 
 
 def _sql_double(x: float) -> str:
@@ -624,56 +625,6 @@ def ivf_topk_from_store(
     )
 
 
-#: (path, dir mtime, top-level (name, len, mtime) listing) -> StructType.
-#: Metadata only — never rows or results. See _read_store.
-_STORE_SCHEMA_CACHE: dict = {}
-
-#: (applicationId, store key) -> the base DataFrame for the store.
-#: Caches FILE-LISTING metadata, not data: ``spark.read.parquet``
-#: builds a fresh InMemoryFileIndex per call — a full recursive
-#: listing of every partition directory, paid driver-side on EVERY
-#: probe of the serving loop (measured the dominant fixed cost of the
-#: 64-partition LSH store probe). Reusing the resolved relation
-#: reuses that listing; each probe still plans its own partition
-#: pruning and scans the parquet itself. Invalidation is the same
-#: content-derived key as the schema memo (rewrite OR in-place
-#: append changes it — see :func:`_store_key`); keyed additionally
-#: by applicationId because a DataFrame dies with its session.
-_STORE_DF_CACHE: dict = {}
-
-
-def _store_key(spark, path: str) -> tuple:
-    """Content-derived cache key for a store directory (ADVICE r13:
-    directory mtime alone has 1 s granularity on many filesystems, so
-    a store overwritten with a different schema within the same second
-    could serve a stale cached schema). The key adds the sorted
-    (name, length, mtime) listing of the directory's top-level
-    entries — ``mode("overwrite")`` rewrites produce new part
-    names/sizes, and an ``append_*`` into an EXISTING ``cell=``/
-    ``bucket=``/``term_bucket=`` partition dir bumps that subdir's
-    mtime (adding an entry to a directory updates its mtime), so both
-    rewrite and in-place growth change the key (the latter matters
-    for the r14 file-listing memo below, which must never serve a
-    listing that misses appended part files). One listStatus per
-    probe, the same metadata round-trip ``_read_sidecar_text``
-    already pays."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    mtime = int(fs.getFileStatus(jpath).getModificationTime())
-    listing = tuple(
-        sorted(
-            (
-                st.getPath().getName(),
-                int(st.getLen()),
-                int(st.getModificationTime()),
-            )
-            for st in fs.listStatus(jpath)
-        )
-    )
-    return (path, mtime, listing)
-
-
 def _read_sidecar_text(spark, dir_path: str):
     """First line of a one-row text sidecar (_ivf_centroids /
     _postings_stats) read DRIVER-SIDE through the Hadoop FileSystem
@@ -716,41 +667,17 @@ def _read_sidecar_text(spark, dir_path: str):
 
 
 def _read_store(spark, path: str) -> DataFrame:
-    """Read an ANN store's parquet, converting the opaque
+    """Read an ANN store's parquet through the relation cache
+    (:func:`datasplash_spark.pipeline._read_relation`: a re-probe of
+    an unchanged store reuses the resolved file listing; every probe
+    still scans the parquet), converting the opaque
     UNABLE_TO_INFER_SCHEMA an empty store raises (only _SUCCESS on
     disk — the input frame had no rows at write time) into a clear
-    error.
-
-    The store SCHEMA is memoized per (path, dir mtime, top-level
-    (name, len) listing — see :func:`_store_key`) so re-probing the
-    same store — the serving shape — skips the per-call footer/schema
-    inference (~0.1 s on local fs, more on object stores).
-    ``mode("overwrite")`` recreates the directory with fresh part
-    names, so a rewrite invalidates the entry even within mtime
-    granularity; only metadata is cached, every probe still scans
-    the parquet itself."""
+    error."""
     from pyspark.errors import AnalysisException
 
-    key = None
-    df_key = None
     try:
-        key = _store_key(spark, path)
-        df_key = (spark.sparkContext.applicationId, key)
-        cached_df = _STORE_DF_CACHE.get(df_key)
-        if cached_df is not None:
-            return cached_df
-        cached = _STORE_SCHEMA_CACHE.get(key)
-        if cached is not None:
-            df = spark.read.schema(cached).parquet(path)
-            if len(_STORE_DF_CACHE) > 64:
-                _STORE_DF_CACHE.clear()
-            _STORE_DF_CACHE[df_key] = df
-            return df
-    except Exception:  # noqa: BLE001 - fs oddity -> uncached path
-        key = None
-        df_key = None
-    try:
-        df = spark.read.parquet(path)
+        return _read_relation(spark, path)
     except AnalysisException as e:
         if "UNABLE_TO_INFER_SCHEMA" in str(e):
             raise ValueError(
@@ -758,14 +685,6 @@ def _read_store(spark, path: str) -> DataFrame:
                 "frame with no rows) — nothing to probe"
             ) from e
         raise
-    if key is not None:
-        if len(_STORE_SCHEMA_CACHE) > 64:
-            _STORE_SCHEMA_CACHE.clear()
-        _STORE_SCHEMA_CACHE[key] = df.schema
-        if len(_STORE_DF_CACHE) > 64:
-            _STORE_DF_CACHE.clear()
-        _STORE_DF_CACHE[df_key] = df
-    return df
 
 
 def materialize_lsh(

@@ -12,6 +12,7 @@ becomes a thin options dict + ``DataFrame.alias``.
 from __future__ import annotations
 
 import os
+import stat
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -187,78 +188,79 @@ def make_session(options: PipelineOptions | None = None) -> SparkSession:
     return spark
 
 
-#: (path, mtime, size-or-listing) -> StructType. Metadata only (the
-#: same discipline as the ANN-store schema memo in
-#: functions/similarity.py): every read still scans the parquet; a
-#: rewrite changes mtime/size/part names and invalidates the entry.
-_TABLE_SCHEMA_CACHE: dict = {}
-
-#: (applicationId, content key) -> base DataFrame. Extends the schema
-#: memo to the RESOLVED RELATION (r14 continuation): even with the
-#: schema known, every ``spark.read.parquet`` call re-runs DataSource
-#: resolution and rebuilds the file index — ~20 ms of driver time per
-#: load_table call, paid by every query build (1-3 tables each).
-#: METADATA only (file listing + schema, never rows — each action
-#: still scans the parquet); the key is content-derived (path, mtime_ns
-#: and size of the file, or the per-entry (name, size, mtime_ns)
-#: top-level listing for directories), so a rewrite OR an in-place
-#: append invalidates; keyed by applicationId because a DataFrame dies
-#: with its context.
-_TABLE_DF_CACHE: dict = {}
-
-#: id(base events DataFrame) -> (base, ts-normalized DataFrame); see
-#: load_table. Entries hold the base, so the id cannot be recycled
-#: while the entry lives, and the hit path re-checks identity.
-_EVENTS_TS_CACHE: dict = {}
+#: (applicationId, content key) -> resolved parquet relation of a
+#: table or ANN store. METADATA only (file listing + schema, never
+#: rows): every action still scans the files. Reusing the relation
+#: skips DataSource resolution and the file-index listing that each
+#: ``spark.read.parquet`` call re-runs (~20 ms per table load, the
+#: dominant fixed cost of a store probe). Keyed by applicationId
+#: because a DataFrame dies with its context; cleared whole when it
+#: holds more than 64 entries.
+_RELATIONS: dict = {}
 
 
-def _read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet`` with the SCHEMA and the resolved base
-    relation memoized per file content-key (r14, guide §1.2/§6):
-    schema inference runs a driver-side footer-read job per call, and
-    relation resolution rebuilds the file index — together the first
-    ~30-100 ms of EVERY query. One fixed cost per table load that the
-    memo removes for repeat loads of an unchanged file. Falls back to
-    plain inference on any fs surprise."""
-    key = None
-    df_key = None
+def _content_key(path: str) -> tuple:
+    """``(path, ((relpath, size, mtime_ns), ...))`` over every file at
+    or under ``path``, walked recursively, so a rewrite, an append or
+    an in-place overwrite anywhere in a partition tree changes it. A
+    single file costs one ``os.stat``. Raises ``OSError`` for a path
+    ``os`` cannot stat or list (remote, vanished mid-walk)."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return (path, (("", st.st_size, st.st_mtime_ns),))
+    files = []
+    todo = [("", path)]
+    while todo:
+        rel, d = todo.pop()
+        with os.scandir(d) as it:
+            for e in it:
+                if e.is_dir():
+                    todo.append((rel + e.name + "/", e.path))
+                else:
+                    f = e.stat()
+                    files.append((rel + e.name, f.st_size, f.st_mtime_ns))
+    return (path, tuple(sorted(files)))
+
+
+def _read_relation(spark: SparkSession, path: str, normalize=None) -> DataFrame:
+    """``spark.read.parquet(path)``, passed through ``normalize`` if
+    given, memoized in ``_RELATIONS`` per content key: an unchanged
+    path returns the identical DataFrame. A path ``os`` cannot stat is
+    read uncached."""
     try:
-        st = os.stat(path)
-        if os.path.isdir(path):
-            listing = tuple(sorted(
-                (e.name, e.stat().st_size, e.stat().st_mtime_ns)
-                for e in os.scandir(path)
-            ))
-            key = (path, int(st.st_mtime_ns), listing)
-        else:
-            key = (path, int(st.st_mtime_ns), st.st_size)
-        df_key = (spark.sparkContext.applicationId, key)
-        cached_df = _TABLE_DF_CACHE.get(df_key)
-        if cached_df is not None:
-            return cached_df
-        cached = _TABLE_SCHEMA_CACHE.get(key)
-        if cached is not None:
-            df = spark.read.schema(cached).parquet(path)
-            if len(_TABLE_DF_CACHE) > 64:
-                _TABLE_DF_CACHE.clear()
-            _TABLE_DF_CACHE[df_key] = df
-            return df
-    except OSError:  # exotic fs / remote path -> plain inference
+        key = (spark.sparkContext.applicationId, _content_key(path))
+    except OSError:
         key = None
-        df_key = None
-    df = spark.read.parquet(path)
-    if key is not None:
-        if len(_TABLE_SCHEMA_CACHE) > 64:
-            _TABLE_SCHEMA_CACHE.clear()
-        _TABLE_SCHEMA_CACHE[key] = df.schema
-        if len(_TABLE_DF_CACHE) > 64:
-            _TABLE_DF_CACHE.clear()
-        _TABLE_DF_CACHE[df_key] = df
+    df = _RELATIONS.get(key)
+    if df is None:
+        df = spark.read.parquet(path)
+        if normalize is not None:
+            df = normalize(df)
+        if key is not None:
+            if len(_RELATIONS) > 64:
+                _RELATIONS.clear()
+            _RELATIONS[key] = df
+    return df
+
+
+def _normalize_events_ts(df: DataFrame) -> DataFrame:
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type == "timestamp_ntz":
+        # NTZ→LTZ reinterprets the wall-clock in the session zone;
+        # value-preserving ONLY under UTC. make_session pins UTC, but
+        # a foreign session (e.g. the external driver's) might not —
+        # pin it here so event times can't silently shift.
+        df.sparkSession.conf.set("spark.sql.session.timeZone", "UTC")
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver testdata table.
+    """Load one driver testdata table through the relation cache
+    (``_read_relation``): a repeat call on unchanged files returns the
+    identical DataFrame.
 
     ``events.parquet``'s ``ts`` column has shipped with two parquet
     physical types across driver testdata generations: TIMESTAMP(NANOS)
@@ -267,7 +269,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Spark reads as TIMESTAMP_NTZ — a type that refuses numeric casts
     and differs from what window/epoch arithmetic expects). Both are
     normalized to session-zone TimestampType; the session runs UTC
-    (`make_session`), so NTZ→LTZ changes no values.
+    (`make_session`), so NTZ→LTZ changes no values. The normalized
+    frame is what the cache holds.
 
     NOTE: ``nanosAsLong`` stays set on the session afterwards — a NANOS
     events scan consults it at *execution* time, so it cannot be
@@ -276,36 +279,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     timestamp precision is affected.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = _read_parquet_memo(spark, path)
-        # the ts normalization below is a pure function of the base
-        # relation — memoize it per base object (the base is itself
-        # memoized per content key, so a rewrite yields a new base and
-        # a fresh transform; ~25 ms of per-call expression building
-        # otherwise re-paid by every events query build)
-        cached = _EVENTS_TS_CACHE.get(id(df))
-        if cached is not None and cached[0] is df:
-            return cached[1]
-        base = df
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            # NTZ→LTZ reinterprets the wall-clock in the session zone;
-            # value-preserving ONLY under UTC. make_session pins UTC,
-            # but a foreign session (e.g. the external driver's) might
-            # not — pin it here so event times can't silently shift.
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        if len(_EVENTS_TS_CACHE) > 8:
-            _EVENTS_TS_CACHE.clear()
-        # store (base, transformed): the base reference both keeps the
-        # id() stable (no address reuse while the entry lives) and lets
-        # the hit path verify identity, not just address equality
-        _EVENTS_TS_CACHE[id(base)] = (base, df)
-        return df
-    return _read_parquet_memo(spark, path)
+    if name != "events":
+        return _read_relation(spark, path)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return _read_relation(spark, path, _normalize_events_ts)
 
 
 def spread_scan(df: DataFrame, *keys: str) -> DataFrame:

@@ -3623,38 +3623,129 @@ def test_append_postings_matches_union_inline(spark, tmp_path):
     assert inline == stored and len(inline) == 25
 
 
-def test_store_listing_memo_identity_and_append_invalidation(
-    spark, tmp_path
-):
-    """r14 probe optimization: ``_read_store`` memoizes the resolved
-    base relation (file listing + schema — METADATA only, never rows)
-    per content-derived store key, so the serving loop's repeated
-    probes skip the per-call recursive file listing. An in-place
-    append into an EXISTING partition directory must invalidate the
-    memo (each top-level entry's mtime is part of the key) so probes
-    never serve a listing that misses appended part files."""
-    vecs = [(i, [float(i + 1), 1.0, 0.5, -1.0]) for i in range(20)]
-    df = generate_input(
-        spark, vecs, "vec_id bigint, embedding array<double>"
-    )
-    store = str(tmp_path / "ivf_memo")
-    sim.materialize_ivf(df, store, n_cells=2)
-    d1 = sim._read_store(spark, store)
-    # memo hit: the SAME resolved relation (no re-listing)
-    assert sim._read_store(spark, store) is d1
-    n1 = d1.count()
-    import time as _time
+def _strip_hadoop_crc(root) -> None:
+    """Drop Spark's ``.crc`` sidecars, as a store copied by a writer
+    that keeps no Hadoop checksums would look: a part file overwritten
+    in place by such a writer must not fail the checksum check on the
+    fresh read the relation cache is compared against."""
+    import pathlib
 
-    _time.sleep(1.1)  # fs mtime granularity floor
-    extra = generate_input(
-        spark,
-        [(100 + i, [float(i + 1), 1.0, 0.5, -1.0]) for i in range(5)],
-        "vec_id bigint, embedding array<double>",
+    for crc in pathlib.Path(root).rglob(".*.crc"):
+        crc.unlink()
+
+
+@pytest.mark.parametrize("write", ["rewrite", "append", "nested_overwrite"])
+@pytest.mark.parametrize("kind", ["table", "store"])
+def test_relation_cache_matches_fresh_read(spark, tmp_path, kind, write):
+    """The relation cache (``pipeline._read_relation``, behind
+    ``load_table`` and every store probe) holds metadata keyed by the
+    recursive content of the path: an unchanged path returns the SAME
+    DataFrame, and after any write the cached read equals a fresh
+    ``spark.read.parquet`` in schema and rows.
+
+    Writes: ``rewrite`` replaces the whole relation with a new schema;
+    ``append`` adds rows (a new part file in an EXISTING partition of
+    the store; the single-file table grows in place);
+    ``nested_overwrite`` rewrites an existing file in place under the
+    same name with one row fewer, in one-row row groups, so the file
+    grows past its old length. For the store that file sits in a
+    partition directory, and neither that directory's nor the store
+    root's mtime changes: a key over top-level entries misses it, and
+    the stale listing splits the scan at the old length, dropping the
+    row groups beyond it."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from datasplash_spark.pipeline import load_table
+
+    if kind == "table":
+        path = str(tmp_path / "t.parquet")
+        pq.write_table(pa.table({"id": list(range(10))}), path)
+        read = lambda: load_table(spark, str(tmp_path), "t")
+        part = path
+    else:
+        path = str(tmp_path / "lsh")
+        vecs = [
+            (i, [float(i % 7) - 3.0, 1.0, float(i % 3), -1.0])
+            for i in range(40)
+        ]
+        schema = "vec_id bigint, embedding array<double>"
+        df = generate_input(spark, vecs, schema).coalesce(1)
+        sim.materialize_lsh(df, path, bits=2)
+        _strip_hadoop_crc(path)
+        read = lambda: sim._read_store(spark, path)
+        part = max(
+            map(str, (tmp_path / "lsh").glob("bucket=*/part-*.parquet")),
+            key=lambda f: pq.ParquetFile(f).metadata.num_rows,
+        )
+
+    def check():
+        cached = read()
+        assert read() is cached  # unchanged path -> same relation
+        fresh = spark.read.parquet(path)
+        assert cached.schema == fresh.schema
+        assert sorted(map(tuple, cached.collect())) == sorted(
+            map(tuple, fresh.collect())
+        )
+
+    check()
+    rows = pq.ParquetFile(part).read()
+    assert rows.num_rows >= 2
+    if write == "rewrite" and kind == "table":
+        pq.write_table(pa.table({"b": [1, 2], "c": ["x", "y"]}), path)
+    elif write == "rewrite":
+        again = generate_input(spark, vecs[:30], schema)
+        again = again.withColumn("tag", F.lit("v2"))
+        sim.materialize_lsh(again, path, bits=2)
+    elif write == "append" and kind == "table":
+        pq.write_table(pa.concat_tables([rows, rows]), path)
+    elif write == "append":
+        appended = os.path.join(os.path.dirname(part), "part-appended.parquet")
+        pq.write_table(rows, appended)
+    else:
+        fewer = rows.slice(0, rows.num_rows - 1)
+        pq.write_table(fewer, part, row_group_size=1)
+    check()
+
+
+def test_load_table_converts_nanosecond_event_times(spark, tmp_path):
+    """An ``events.parquet`` whose ``ts`` is TIMESTAMP(NANOS) (the
+    ``nanosAsLong`` branch of load_table) reads as ``timestamp`` with
+    the source instants, and a repeat call returns the same object."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from datasplash_spark.pipeline import load_table
+
+    nanos = [1_700_000_000_123_456_000, 1_700_000_001_000_001_000, 0]
+    ts = pa.array(nanos, pa.timestamp("ns"))
+    path = tmp_path / "events.parquet"
+    pq.write_table(pa.table({"event_id": [1, 2, 3], "ts": ts}), path)
+    assert str(pq.read_schema(path).field("ts").type) == "timestamp[ns]"
+    df = load_table(spark, str(tmp_path), "events")
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    got = [
+        r.us
+        for r in df.orderBy("event_id")
+        .select(F.unix_micros("ts").alias("us"))
+        .collect()
+    ]
+    assert got == [n // 1000 for n in nanos]
+    assert load_table(spark, str(tmp_path), "events") is df
+
+
+def test_empty_store_probe_names_the_path(spark, tmp_path):
+    """A store written with ``dim=`` from a frame with no rows holds no
+    parquet; probing it raises a ValueError naming the store, not
+    Spark's UNABLE_TO_INFER_SCHEMA."""
+    empty = generate_input(
+        spark, [], "vec_id bigint, embedding array<double>"
     )
-    sim.append_ivf(extra, store, skip_existing_ids=False)
-    d2 = sim._read_store(spark, store)
-    assert d2 is not d1  # key changed -> fresh listing
-    assert d2.count() == n1 + 5  # appended rows visible
+    store = str(tmp_path / "lsh_empty")
+    sim.materialize_lsh(empty, store, bits=2, dim=4)
+    with pytest.raises(ValueError, match="is empty") as err:
+        sim.lsh_topk_from_store(spark, store, [1.0, 0, 0, 0], k=3, bits=2)
+    assert repr(store) in str(err.value)
 
 
 def test_append_ivf_matches_full_build(spark, tmp_path):
@@ -6582,21 +6673,6 @@ def test_quantized_topk_trusted_raises_on_width_mismatch(spark):
     )
     with pytest.raises(Exception, match="store and sidecar disagree"):
         sim.quantized_topk(codes, [1, 2], k=2, trusted_dim=2).collect()
-
-
-def test_table_schema_memo_invalidates_on_rewrite(spark, tmp_path):
-    """pipeline._read_parquet_memo caches ONLY the schema, keyed on
-    (path, mtime_ns, size/listing): rewriting the file with a new
-    schema must serve the new schema, not the memo."""
-    from datasplash_spark.pipeline import _read_parquet_memo
-
-    p = str(tmp_path / "t.parquet")
-    spark.createDataFrame([(1,)], "a long").toPandas().to_parquet(p)
-    assert _read_parquet_memo(spark, p).columns == ["a"]
-    import pandas as pd
-
-    pd.DataFrame({"b": [2], "c": [3]}).to_parquet(p)
-    assert sorted(_read_parquet_memo(spark, p).columns) == ["b", "c"]
 
 
 def test_sidecar_fastpath_requires_json(spark, tmp_path):
